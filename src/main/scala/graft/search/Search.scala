@@ -32,13 +32,6 @@ object Search {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** L2-normalize an array column (reference `F.normalize(p=2)`,
-    * src/encode.py:304). Zero vectors stay zero. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
-
   def asDouble(a: Column): Column = a.cast("array<double>")
 
   /** K1: exact inner-product top-k of a literal query vector against a
@@ -432,24 +425,10 @@ object Search {
     * centroid-id tiebreak. Native expression with the centroid matrix as a
     * reference object (org.apache.spark.sql.graft.IvfAssign) — code size is
     * independent of nCentroids, so IVF-realistic centroid counts (10⁴–10⁵)
-    * stay inside whole-stage codegen. Bit-identical to [[ivfAssignLiteral]]
-    * (asserted in IvfSpec). */
+    * stay inside whole-stage codegen. Bit-identical to the literal-expression
+    * twin in the test tree (asserted in IvfSpec). */
   def ivfAssign(vec: Column, cents: Array[Array[Double]]): Column =
     org.apache.spark.sql.graft.IvfAssign.assign(vec, cents)
-
-  /** Built-ins-only formulation (array_min over literal centroid structs) —
-    * cross-check twin for tests; inlines every centroid into the generated
-    * code, so it stops codegenning at large nCentroids. */
-  def ivfAssignLiteral(vec: Column, cents: Array[Array[Double]]): Column = {
-    val vv = dot(vec, vec)
-    val entries = cents.zipWithIndex.map { case (c, i) =>
-      var cn = 0.0; var j = 0
-      while (j < c.length) { cn += c(j) * c(j); j += 1 }
-      struct((vv - lit(2.0) * dot(vec, typedLit(c)) + lit(cn)).as("d"),
-        lit(i).as("cid"))
-    }
-    array_min(array(entries.toIndexedSeq: _*)).getField("cid")
-  }
 
   /** IVF ANN top-k for a small query-id set: fit centroids, assign every
     * vector to its bucket, probe the `nProbe` nearest centroids per query
@@ -932,23 +911,10 @@ object Search {
     * sign-agnostic. Native expression with the thresholds as a reference
     * object (org.apache.spark.sql.graft.BqSignature) — code size is
     * independent of dim, so fused-vector widths (405+) stay inside
-    * whole-stage codegen. Bit-identical to [[bqSignaturesHof]]. */
+    * whole-stage codegen. Bit-identical to the HOF twin in the test tree
+    * (asserted in BinarySpec). */
   def bqSignatures(vec: Column, thresholds: Array[Double]): Column =
     org.apache.spark.sql.graft.BqSignature.pack(asDouble(vec), thresholds)
-
-  /** Built-ins-only formulation (64 when-branches per word) — cross-check
-    * twin for tests; inlines one branch per dimension into the generated
-    * code, so it bloats at fused-vector widths. */
-  def bqSignaturesHof(vec: Column, thresholds: Array[Double]): Column = {
-    val v = asDouble(vec)
-    val words = thresholds.indices.grouped(64).map { idxs =>
-      idxs.map { i =>
-        when(element_at(v, i + 1) > lit(thresholds(i)), lit(1L << (i % 64)))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-    }.toSeq
-    array(words: _*)
-  }
 
   /** Hamming distance between two packed signature arrays: per-word
     * xor + popcount, summed. Native kernel — the former

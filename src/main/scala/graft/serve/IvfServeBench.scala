@@ -3,12 +3,15 @@ package graft.serve
 import graft.Tables
 import org.apache.spark.sql.SparkSession
 
-/** Measured pruned-vs-unpruned serving comparison for BASELINE.md (VERDICT
-  * r8 ask #8's bench row): build the cid-partitioned IVF index over
-  * SPARK_GRAFT_SF_DIR's embeddings, then time probed top-k at nProbe=2 vs
-  * an exhaustive probe (= full scan), median of 5 after warmup. The pruned
-  * query's win is IO-proportional: it reads nProbe/nCentroids of the files
-  * (the spec asserts the file counts; this main measures the wall-clock).
+/** Measured serving comparisons for BASELINE.md: build the cid-partitioned
+  * IVF index over SPARK_GRAFT_SF_DIR's embeddings, then time probed top-k
+  * at nProbe=2 vs an exhaustive probe (= full scan), batched vs sequential
+  * probes, each compressed tier, and batches racing maintenance churn —
+  * median of 5 after warmup. The pruned query's win is IO-proportional: it
+  * reads nProbe/nCentroids of the files (the spec asserts the file counts;
+  * this main measures the wall-clock).
+  *
+  * Run: `SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=<n> sbt "runMain graft.serve.IvfServeBench"`.
   */
 object IvfServeBench {
   def main(args: Array[String]): Unit = {
@@ -59,62 +62,31 @@ object IvfServeBench {
     println(f"[ivf] batch P=${batchQ.size} nProbe=2: batched $tBatch%.3f s vs " +
       f"sequential $tSeq%.3f s = ${tBatch / tSeq}%.2fx " +
       f"(one-query pruned scan was $pruned%.3f s)")
-    // IVF+PQ: the compressed index — ADC reads only (id, codes); measure
-    // the codes-vs-vectors byte share and the ADC + refined query times
-    val pqPath = java.nio.file.Files.createTempDirectory("graft-ivfpq-bench").toString
-    val p0 = System.nanoTime()
-    val hp = IvfIndex.writePq(emb, "embedding", "vec_id", pqPath,
-      nCents, iters = 3, dim = q.length, m = 8, ksub = 16, pqIters = 3)
-    println(f"[ivf] pq build ${(System.nanoTime() - p0) / 1e9}%.1f s ($pqPath)")
-    val tAdc = med5(IvfIndex.probedTopKAdc(spark, hp, q, 2, 10).collect())
-    val tRef = med5(IvfIndex.probedTopKRefined(spark, hp, q, 2, 10, kAdc = 40).collect())
-    println(f"[ivf] pq ADC(nProbe=2) $tAdc%.3f s, refined(kAdc=40) $tRef%.3f s " +
-      f"vs exact pruned $pruned%.3f s")
-    // batched COMPRESSED serving: the probedTopKBatch contract on the PQ
-    // and SQ8 tiers — P queries' own ADC tables in one (id, codes|sq) scan
-    val tSeqAdc = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKAdc(spark, hp, q, 2, 10).collect()))
-    val tBatchAdc = med5(IvfIndex.probedTopKBatchAdc(spark, hp, batchQ, 2, 10))
-    println(f"[ivf] pq batch P=${batchQ.size} nProbe=2: batched $tBatchAdc%.3f s vs " +
-      f"sequential $tSeqAdc%.3f s = ${tBatchAdc / tSeqAdc}%.2fx " +
-      f"(one-query ADC scan was $tAdc%.3f s)")
-    val sqPath = java.nio.file.Files.createTempDirectory("graft-ivfsq-bench").toString
-    val s0 = System.nanoTime()
-    val hs = IvfIndex.writeSq(emb, "embedding", "vec_id", sqPath,
-      nCents, iters = 3, dim = q.length)
-    println(f"[ivf] sq build ${(System.nanoTime() - s0) / 1e9}%.1f s ($sqPath)")
-    val tSq = med5(IvfIndex.probedTopKSq(spark, hs, q, 2, 10).collect())
-    val tSeqSq = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKSq(spark, hs, q, 2, 10).collect()))
-    val tBatchSq = med5(IvfIndex.probedTopKBatchSq(spark, hs, batchQ, 2, 10))
-    println(f"[ivf] sq8(nProbe=2) $tSq%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchSq%.3f s vs sequential $tSeqSq%.3f s = ${tBatchSq / tSeqSq}%.2fx")
-    // IVF+binary: the 64x tier — Hamming shortlist over (id, sig) + exact
-    // refine; the batched path is TWO pruned scans for the whole batch
-    val bqPath = java.nio.file.Files.createTempDirectory("graft-ivfbq-bench").toString
-    val b0 = System.nanoTime()
-    val hb = IvfIndex.writeBq(emb, "embedding", "vec_id", bqPath,
-      nCents, iters = 3, dim = q.length)
-    println(f"[ivf] bq build ${(System.nanoTime() - b0) / 1e9}%.1f s ($bqPath)")
-    val tBq = med5(IvfIndex.probedTopKBq(spark, hb, q, 2, 10, shortlist = 40).collect())
-    val tSeqBq = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKBq(spark, hb, q, 2, 10, shortlist = 40).collect()))
-    val tBatchBq = med5(IvfIndex.probedTopKBqBatch(spark, hb, batchQ, 2, 10, shortlist = 40))
-    println(f"[ivf] bq(nProbe=2, shortlist=40) $tBq%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchBq%.3f s vs sequential $tSeqBq%.3f s = ${tBatchBq / tSeqBq}%.2fx")
-    // IVF+MRL: the fit-free prefix tier — truncated-cosine shortlist over
-    // (id, pre, pn) + exact refine; batched = two pruned scans total
-    val mrlPath = java.nio.file.Files.createTempDirectory("graft-ivfmrl-bench").toString
-    val m0 = System.nanoTime()
-    val hm = IvfIndex.writeMrl(emb, "embedding", "vec_id", mrlPath,
-      nCents, iters = 3, prefixDim = 16)
-    println(f"[ivf] mrl build ${(System.nanoTime() - m0) / 1e9}%.1f s ($mrlPath)")
-    val tMrl = med5(IvfIndex.probedTopKMrl(spark, hm, q, 2, 10, shortlist = 40).collect())
-    val tSeqMrl = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKMrl(spark, hm, q, 2, 10, shortlist = 40).collect()))
-    val tBatchMrl = med5(IvfIndex.probedTopKMrlBatch(spark, hm, batchQ, 2, 10, shortlist = 40))
-    println(f"[ivf] mrl(prefix=16, nProbe=2, shortlist=40) $tMrl%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchMrl%.3f s vs sequential $tSeqMrl%.3f s = ${tBatchMrl / tSeqMrl}%.2fx")
+    // the compressed tiers, each written over the same vectors: the
+    // single-query probe at nProbe=2, and P queries batched (one pruned
+    // scan per stage) vs P sequential probes. PQ is measured raw (ADC over
+    // (id, codes)) and refined; binary and MRL always refine a shortlist.
+    val tiers: Seq[(String, IvfIndex.Fit, Seq[Int])] = Seq(
+      ("pq", IvfIndex.Pq.fit(m = 8, ksub = 16, iters = 3), Seq(0, 40)),
+      ("sq8", IvfIndex.Sq8.fit, Seq(0)),
+      ("bq", IvfIndex.Bq.fit, Seq(40)),
+      ("mrl(prefix=16)", IvfIndex.Mrl.fit(prefixDim = 16), Seq(40)))
+    tiers.foreach { case (name, fit, shortlists) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-ivf-tier-bench").toString
+      val b0 = System.nanoTime()
+      val ix = IvfIndex.write(emb, "embedding", "vec_id", dir, nCents, iters = 3, tier = fit)
+      println(f"[ivf] $name build ${(System.nanoTime() - b0) / 1e9}%.1f s ($dir)")
+      shortlists.foreach { sl =>
+        val tOne = med5(IvfIndex.probedTopK(spark, ix, q, 2, 10, sl).collect())
+        val tSeqT = med5(batchQ.foreach(q =>
+          IvfIndex.probedTopK(spark, ix, q, 2, 10, sl).collect()))
+        val tBatchT = med5(IvfIndex.probedTopKBatch(spark, ix, batchQ, 2, 10, sl))
+        val knobs = if (sl > 0) s"nProbe=2, shortlist=$sl" else "nProbe=2"
+        println(f"[ivf] $name($knobs) $tOne%.3f s vs exact pruned $pruned%.3f s; " +
+          f"batch P=${batchQ.size}: batched $tBatchT%.3f s vs sequential " +
+          f"$tSeqT%.3f s = ${tBatchT / tSeqT}%.2fx")
+      }
+    }
     // r10 ask #5: serving under MAINTENANCE CHURN — batched probes racing
     // append + compact cycles on the same index. A probe that loses the
     // listing race to a compaction swap fails LOUDLY (never a silent

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   * is ONE call, and packing is a tight primitive loop — dimension count
   * no longer affects code size.
   *
-  * Bit semantics are identical to the HOF twin ([[graft.search.Search
-  * .bqSignaturesHof]], parity spec-asserted): bit i set iff v_i >
+  * Bit semantics are identical to the HOF twin (ReferenceTwins
+  * .bqSignaturesHof in the test tree, parity spec-asserted): bit i set iff v_i >
   * threshold_i (strict), bit i lives at word i/64, position i mod 64
   * (bit 63 = the long's sign bit), null elements set no bit.
   */

@@ -30,6 +30,8 @@ case class LangIdPick(child: Expression, profiles: Seq[(String, Set[String])])
   extends UnaryExpression with ExpectsInputTypes {
 
   require(profiles.nonEmpty, "need at least one language profile")
+  // one bit per language in an Int mask: a 33rd profile would wrap onto bit 0
+  require(profiles.size <= 32, s"${profiles.size} language profiles exceed the 32-bit mask")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType

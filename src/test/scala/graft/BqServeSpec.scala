@@ -17,12 +17,14 @@ class BqServeSpec extends SparkSpec {
   private val nCents = 8
   private val dim = 64
 
-  private lazy val built: IvfIndex.BqHandle = {
+  private lazy val built: IvfIndex.Index = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfbq").toString
-    IvfIndex.writeBq(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, dim = dim)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.Bq.fit)
   }
+
+  private def thresholds(ix: IvfIndex.Index) = ix.tier.asInstanceOf[IvfIndex.Bq].thresholds
 
   private lazy val q0: Array[Double] = Tables.embeddings(spark, sf("sf0.001"))
     .filter(col("vec_id") === 7L).select("embedding")
@@ -30,25 +32,24 @@ class BqServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids AND thresholds, no scan") {
     val h = built
-    val reopened = IvfIndex.openBq(spark, h.path)
+    val reopened = IvfIndex.open(spark, h.path)
     assert(reopened.dim == dim)
-    assert(reopened.thresholds.toSeq == h.thresholds.toSeq)
+    assert(thresholds(reopened).toSeq == thresholds(h).toSeq)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
   }
 
   test("shortlist scan prunes directories AND columns: sig words read, vectors not") {
     val h = built
-    // drive the shortlist phase alone (the first job inside probedTopKBq):
+    // drive the shortlist phase alone (the first job of a binary probedTopK):
     // project (id, sig), Hamming, limit — and inspect its executed scan
-    val cells = IvfIndex.probeCells(
-      IvfIndex.Handle(h.path, h.centroids), q0, 2)
+    val cells = IvfIndex.probeCells(h, q0, 2)
     val qSig = q0.indices.grouped(64).map { idxs =>
       idxs.foldLeft(0L) { (w, i) =>
-        if (q0(i) > h.thresholds(i)) w | (1L << (i % 64)) else w
+        if (q0(i) > thresholds(h)(i)) w | (1L << (i % 64)) else w
       }
     }.toSeq
-    val df = IvfIndex.prunedScan(spark, IvfIndex.Handle(h.path, h.centroids), cells)
+    val df = IvfIndex.prunedScan(spark, h, cells)
       .select(col("id"), col("sig"))
       .withColumn("hamming", Search.hammingDistance(col("sig"), typedLit(qSig)))
       .orderBy(col("hamming"), col("id")).limit(40)
@@ -75,12 +76,12 @@ class BqServeSpec extends SparkSpec {
   test("full probe + corpus-wide shortlist == the exact index's top-k") {
     val h = built
     val n = Tables.embeddings(spark, sf("sf0.001")).count().toInt
-    val refined = IvfIndex.probedTopKBq(spark, h, q0, nProbe = nCents,
+    val refined = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents,
         k = 10, shortlist = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // exact tier on the same layout (writeBq keeps v/vn like write does)
+    // exact tier on the same layout (every tier keeps v/vn)
     val exact = IvfIndex.probedTopK(spark,
-        IvfIndex.Handle(h.path, h.centroids), q0, nProbe = nCents, k = 10)
+        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(refined == exact,
       "corpus-wide-shortlist binary serving must equal exact serving")
@@ -93,15 +94,30 @@ class BqServeSpec extends SparkSpec {
       emb.filter(col("vec_id") === id).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
-    val batch = IvfIndex.probedTopKBqBatch(spark, h, queries, nProbe = 3,
+    val batch = IvfIndex.probedTopKBatch(spark, h, queries, nProbe = 3,
       k = 5, shortlist = 30)
     val seq = queries.map { q =>
-      IvfIndex.probedTopKBq(spark, h, q, nProbe = 3, k = 5, shortlist = 30)
+      IvfIndex.probedTopK(spark, h, q, nProbe = 3, k = 5, shortlist = 30)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     (batch, seq).zipped.foreach { (b, s) =>
       assert(b == s, s"batched $b != sequential $s")
     }
+  }
+
+  test("shortlist arguments are checked against the tier, naming it") {
+    val h = built
+    val unrefined = intercept[IllegalArgumentException](
+      IvfIndex.probedTopK(spark, h, q0, nProbe = 2, k = 10))
+    assert(unrefined.getMessage.contains("tier binary must refine"), unrefined.getMessage)
+    intercept[IllegalArgumentException](
+      IvfIndex.probedTopKBatch(spark, h, Seq(q0), nProbe = 2, k = 10, shortlist = 5))
+    val calib = intercept[IllegalArgumentException](
+      IvfIndex.calibrateNProbe(spark, h, Seq(q0), k = 10, target = 0.9))
+    assert(calib.getMessage.contains("calibrateShortlist"), calib.getMessage)
+    val exact = intercept[IllegalArgumentException](IvfIndex.probedTopK(spark,
+      h.copy(tier = IvfIndex.Flat), q0, nProbe = 2, k = 10, shortlist = 20))
+    assert(exact.getMessage.contains("tier flat is exact"), exact.getMessage)
   }
 
   test("calibrateShortlistBq: minimal shortlist meeting the target, monotone curve") {
@@ -113,7 +129,7 @@ class BqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     val target = 0.6
-    val (chosen, curve) = IvfIndex.calibrateShortlistBq(spark, h, sample,
+    val (chosen, curve) = IvfIndex.calibrateShortlist(spark, h, sample,
       nProbe = nCents, k = 5, target = target, maxShortlist = n)
     info(s"chosen shortlist=$chosen; curve=${curve.map { case (s, r) => f"$s:$r%.2f" }.mkString(", ")}")
     val m = curve.toMap
@@ -141,7 +157,7 @@ class BqServeSpec extends SparkSpec {
     // unreachable, and the old code returned (maxShortlist, curve) exactly
     // like a success — a caller would deploy believing target met
     val e = intercept[IllegalStateException] {
-      IvfIndex.calibrateShortlistBq(spark, h, sample,
+      IvfIndex.calibrateShortlist(spark, h, sample,
         nProbe = nCents, k = 5, target = 1.0, maxShortlist = 5)
     }
     assert(e.getMessage.contains("infeasible"))
@@ -149,12 +165,12 @@ class BqServeSpec extends SparkSpec {
 
   test("probed binary serving: sane recall at a 40-candidate shortlist") {
     val h = built
-    val got = IvfIndex.probedTopKBq(spark, h, q0, nProbe = nCents,
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents,
         k = 10, shortlist = 40)
       .collect().map(_.getLong(0)).toSet
     assert(got.size == 10)
     val exact = IvfIndex.probedTopK(spark,
-        IvfIndex.Handle(h.path, h.centroids), q0, nProbe = nCents, k = 10)
+        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(_.getLong(0)).toSet
     val recall = exact.count(got.contains).toDouble / exact.size
     info(s"binary(shortlist=40) recall@10 vs exact: $recall")

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CentroidDelta
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 
 /** Differential pin: the native residual kernel must match the
   * zip_with/element_at HOF it replaced, bit for bit, nulls included. */
@@ -32,5 +36,33 @@ class CentroidDeltaSpec extends SparkSpec {
           s"delta differs for id=${r.getLong(0)}")
       }
     }
+  }
+
+  test("null cid with a non-null v yields null in eval and codegen, like zip_with") {
+    import spark.implicits._
+    val cents = Array(Array(0.25, -1.5), Array(1.0, 2.0))
+    // the HOF it replaced: element_at(cents, null) is null, so zip_with is null
+    val df = Seq((1L, Seq(3.0, 4.0), Option.empty[Int])).toDF("id", "v", "cid")
+    val r = df.select(CentroidDelta.delta(col("v"), col("cid"), cents),
+      zip_with(col("v"), element_at(typedLit(cents.map(_.toSeq).toSeq), col("cid") + 1),
+        (x, c) => x - c)).head()
+    assert(r.isNullAt(1), "reference HOF form is not null")
+    assert(r.isNullAt(0), "native kernel subtracted a centroid for a null cid")
+    val e = CentroidDelta(Literal.create(Seq(3.0, 4.0), ArrayType(DoubleType)),
+      Literal.create(null, IntegerType), cents)
+    assert(e.nullable)
+    assert(e.eval(InternalRow.empty) == null, "eval path not null")
+    assert(GenerateUnsafeProjection.generate(Seq(e)).apply(InternalRow.empty).isNullAt(0),
+      "codegen path not null")
+  }
+
+  test("value equality: equal centroid tables compare and hash equal") {
+    def expr(cents: Array[Array[Double]]) = CentroidDelta(
+      BoundReference(0, ArrayType(DoubleType), nullable = true),
+      BoundReference(1, IntegerType, nullable = true), cents)
+    val a = expr(Array(Array(1.0, 2.0), Array(3.0, 4.0)))
+    val b = expr(Array(Array(1.0, 2.0), Array(3.0, 4.0)))
+    assert(a == b && a.hashCode == b.hashCode, "same table, different identity")
+    assert(a != expr(Array(Array(1.0, 2.0), Array(3.0, 4.5))), "different tables compare equal")
   }
 }

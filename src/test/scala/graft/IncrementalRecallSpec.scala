@@ -85,7 +85,7 @@ class IncrementalRecallSpec extends SparkSpec {
       .map(r => r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble).toArray)
     assert(queries.length >= 10, s"query panel too small: ${queries.length}")
 
-    def topK(h: IvfIndex.Handle, qv: Array[Double], nProbe: Int): Seq[(Long, Double)] =
+    def topK(h: IvfIndex.Index, qv: Array[Double], nProbe: Int): Seq[(Long, Double)] =
       IvfIndex.probedTopK(spark, h, qv, nProbe, K)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
@@ -97,7 +97,7 @@ class IncrementalRecallSpec extends SparkSpec {
     }
 
     // claim 2 — TOLERANCED at partial probe vs the full-probe ground truth
-    def recall(h: IvfIndex.Handle, qv: Array[Double], truth: Set[Long]): Double =
+    def recall(h: IvfIndex.Index, qv: Array[Double], truth: Set[Long]): Double =
       topK(h, qv, NProbe).count { case (id, _) => truth(id) }.toDouble / K
     val (incR, scrR) = queries.map { qv =>
       val truth = topK(inc, qv, nCents).map(_._1).toSet

@@ -15,7 +15,7 @@ class IvfServeSpec extends SparkSpec {
 
   private val nCents = 8
 
-  private lazy val built: (IvfIndex.Handle, Int) = {
+  private lazy val built: (IvfIndex.Index, Int) = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     val h = IvfIndex.write(emb, "embedding", "vec_id", path,
@@ -171,8 +171,8 @@ class IvfServeSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 7L).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble).toArray
     val nProbe = 2; val k = 5; val wantLabel = 1
-    def freshDf = IvfIndex.probedTopKWhere(spark, h, q, nProbe, k,
-      col("label") === wantLabel)
+    def freshDf = IvfIndex.probedTopK(spark, h, q, nProbe, k,
+      pred = Some(col("label") === wantLabel))
     val got = freshDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got.nonEmpty, "fixture holds no matching rows — filter untested")
     // driver twin: rounded cosine over the probed cells' matching rows
@@ -230,9 +230,9 @@ class IvfServeSpec extends SparkSpec {
     val preds = Seq(col("label") === 1, col("label") =!= 2,
       col("label") < 5, lit(true))
     val nProbe = 2; val k = 5
-    val batch = IvfIndex.probedTopKBatchWhere(spark, h, qs, nProbe, k, preds)
+    val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, k, preds = preds)
     val seq = (qs, preds).zipped.map { (q, p) =>
-      IvfIndex.probedTopKWhere(spark, h, q, nProbe, k, p)
+      IvfIndex.probedTopK(spark, h, q, nProbe, k, pred = Some(p))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     (batch, seq).zipped.zipWithIndex.foreach { case ((b, s), i) =>

@@ -23,7 +23,7 @@ class IvfSpec extends SparkSpec {
     val df = randVecs(500, 32, 8L).toDF("id", "v")
     val both = df.select(col("id"),
         Search.ivfAssign(col("v"), cents).as("native"),
-        Search.ivfAssignLiteral(col("v"), cents).as("literal"))
+        ReferenceTwins.ivfAssignLiteral(col("v"), cents).as("literal"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getInt(1) == r.getInt(2),

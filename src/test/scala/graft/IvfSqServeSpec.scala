@@ -17,12 +17,14 @@ class IvfSqServeSpec extends SparkSpec {
   private val nCents = 8
   private val dim = 64
 
-  private lazy val built: IvfIndex.SqHandle = {
+  private lazy val built: IvfIndex.Index = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
-    IvfIndex.writeSq(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, dim = dim)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.Sq8.fit)
   }
+
+  private def sq(ix: IvfIndex.Index) = ix.tier.asInstanceOf[IvfIndex.Sq8]
 
   // MUST be a lazy val, not a def: test 3's driver recompute indexes
   // q0(i) inside a per-row/per-dim loop — as a def that ran the whole
@@ -33,17 +35,17 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids AND the (min, max) grid, no scan") {
     val h = built
-    val reopened = IvfIndex.openSq(spark, h.path)
+    val reopened = IvfIndex.open(spark, h.path)
     assert(reopened.dim == dim)
-    assert(reopened.mins.toSeq == h.mins.toSeq)
-    assert(reopened.maxs.toSeq == h.maxs.toSeq)
+    assert(sq(reopened).mins.toSeq == sq(h).mins.toSeq)
+    assert(sq(reopened).maxs.toSeq == sq(h).maxs.toSeq)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
   }
 
   test("SQ scan prunes directories AND columns: sq bytes read, vectors not") {
     val h = built
-    val df = IvfIndex.probedTopKSq(spark, h, q0, nProbe = 2, k = 10)
+    val df = IvfIndex.probedTopK(spark, h, q0, nProbe = 2, k = 10)
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -65,7 +67,7 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("scores match a driver dequant recompute; on-disk sq is dim bytes") {
     val h = built
-    val got = IvfIndex.probedTopKSq(spark, h, q0, nProbe = nCents, k = 10)
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     // independent driver recompute over ALL vectors (exhaustive probe)
     val rows = Tables.embeddings(spark, sf("sf0.001"))
@@ -74,9 +76,9 @@ class IvfSqServeSpec extends SparkSpec {
     val expected = rows.map { case (id, v) =>
       var s = 0.0; var i = 0
       while (i < dim) {
-        val d = h.maxs(i) - h.mins(i)
-        val dq = if (d == 0.0) h.mins(i)
-          else h.mins(i) + math.round((v(i) - h.mins(i)) / d * 255).toDouble * d / 255.0
+        val d = sq(h).maxs(i) - sq(h).mins(i)
+        val dq = if (d == 0.0) sq(h).mins(i)
+          else sq(h).mins(i) + math.round((v(i) - sq(h).mins(i)) / d * 255).toDouble * d / 255.0
         s += dq * q0(i); i += 1
       }
       (id, BigDecimal(s).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0)
@@ -97,9 +99,9 @@ class IvfSqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     for (nProbe <- Seq(2, nCents)) {
-      val batch = IvfIndex.probedTopKBatchSq(spark, h, qs, nProbe, 10)
+      val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, 10)
       val sequential = qs.map { q =>
-        IvfIndex.probedTopKSq(spark, h, q, nProbe, 10)
+        IvfIndex.probedTopK(spark, h, q, nProbe, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       }
       assert(batch.size == qs.size)
@@ -107,7 +109,7 @@ class IvfSqServeSpec extends SparkSpec {
         assert(b == s, s"nProbe=$nProbe batch $b != sequential $s")
       }
     }
-    assert(IvfIndex.probedTopKBatchSq(spark, h, Nil, 2, 10).isEmpty)
+    assert(IvfIndex.probedTopKBatch(spark, h, Nil, 2, 10).isEmpty)
   }
 
   test("calibrateNProbeSq: minimal probe count vs the tier's own exhaustive probe") {
@@ -118,15 +120,15 @@ class IvfSqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     val k = 10
-    val exact = IvfIndex.probedTopKBatchSq(spark, h, sample, nCents, k)
+    val exact = IvfIndex.probedTopKBatch(spark, h, sample, nCents, k)
       .map(_.map(_._1).toSet)
     def recallAt(p: Int): Double = {
-      val got = IvfIndex.probedTopKBatchSq(spark, h, sample, p, k)
+      val got = IvfIndex.probedTopKBatch(spark, h, sample, p, k)
       (got, exact).zipped.map((g, e) =>
         g.count(t => e(t._1)).toDouble / e.size).sum / sample.size
     }
     val target = 0.9
-    val (chosen, curve) = IvfIndex.calibrateNProbeSq(spark, h, sample, k, target)
+    val (chosen, curve) = IvfIndex.calibrateNProbe(spark, h, sample, k, target)
     assert(chosen >= 1 && chosen <= nCents)
     assert(recallAt(chosen) >= target)
     if (chosen > 1) assert(recallAt(chosen - 1) < target,
@@ -137,7 +139,7 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("exhaustive-probe SQ8 top-k == exact IP top-k on the fixture (no-refine claim)") {
     val h = built
-    val got = IvfIndex.probedTopKSq(spark, h, q0, nProbe = nCents, k = 10)
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents, k = 10)
       .collect().map(_.getLong(0)).toSeq
     val exact = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id").cast("long").as("vec_id"),
@@ -150,5 +152,57 @@ class IvfSqServeSpec extends SparkSpec {
     // swap tolerated: adjacent true scores can sit inside the error band)
     val overlap = got.count(exact.contains)
     assert(overlap >= 9, s"SQ8 head diverged from exact: $got vs $exact")
+  }
+
+  test("shared pipeline on compressed tiers: filtered batch == sequential, streamed rows carry codes") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val emb = Tables.embeddings(spark, sf("sf0.001"))
+    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(s"graft-ivf$tag").toString
+    def vec(id: Long): Array[Double] = emb.filter(col("vec_id") === id).select("embedding")
+      .head().getSeq[Float](0).map(_.toDouble).toArray
+    // metadata rides the compressed layouts too; each query its own filter
+    val sqMeta = IvfIndex.write(emb, "embedding", "vec_id", tmp("sqmeta"),
+      nCentroids = nCents, iters = 3, metaCols = Seq("label"), tier = IvfIndex.Sq8.fit)
+    val bqMeta = IvfIndex.write(emb, "embedding", "vec_id", tmp("bqmeta"),
+      nCentroids = nCents, iters = 3, metaCols = Seq("label"), tier = IvfIndex.Bq.fit)
+    val qs = Seq(0L, 3L, 7L, 11L).map(vec)
+    val preds = Seq(col("label") === 1, col("label") =!= 2, col("label") < 5, lit(true))
+    val nProbe = 2; val k = 5
+    for ((ix, shortlist) <- Seq(sqMeta -> 0, bqMeta -> 30)) {
+      val batch = IvfIndex.probedTopKBatch(spark, ix, qs, nProbe, k, shortlist, preds)
+      val seq = qs.zip(preds).map { case (q, p) =>
+        IvfIndex.probedTopK(spark, ix, q, nProbe, k, shortlist, Some(p))
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      }
+      batch.zip(seq).zipWithIndex.foreach { case ((b, s), i) =>
+        assert(b == s, s"${ix.tier.name} query $i diverged:\nbatch $b\nseq   $s")
+      }
+      val labels = spark.read.parquet(ix.path).select("id", "label").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      assert(batch(0).nonEmpty, s"${ix.tier.name}: fixture holds no matching rows")
+      batch(0).foreach { case (id, _) => assert(labels(id) == 1) }
+      batch(1).foreach { case (id, _) => assert(labels(id) != 2) }
+    }
+    // a clone of row 3 streamed in under a fresh id is encoded like a
+    // written row: same sq bytes as its source, so it ties its source's
+    // score at the head of its own query
+    val ix = IvfIndex.write(emb, "embedding", "vec_id", tmp("sqapp"),
+      nCentroids = nCents, iters = 3, tier = IvfIndex.Sq8.fit)
+    val clone = (100003L, vec(3L).toSeq)
+    val mem = MemoryStream[(Long, Seq[Double])]
+    val stream = IvfIndex.appendStream(mem.toDF().toDF("vec_id", "embedding"),
+      "embedding", "vec_id", ix, tmp("sqckpt")).start()
+    mem.addData(clone); stream.processAllAvailable()
+    stream.stop()
+    val codes = spark.read.parquet(ix.path).filter(col("id").isin(3L, 100003L))
+      .select("sq").collect().map(_.getAs[Array[Byte]](0).toSeq)
+    assert(codes.length == 2 && codes.distinct.length == 1,
+      s"streamed clone's sq codes differ from its source's: $codes")
+    val top = IvfIndex.probedTopK(spark, ix, clone._2.toArray, nProbe = 2, k = 2)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(top.map(_._1).contains(100003L), s"streamed clone not served: $top")
+    assert(top.forall(_._2 == top.head._2), s"clone is not a top hit of its own query: $top")
   }
 }

@@ -82,4 +82,15 @@ class LangIdSpec extends SparkSpec {
     assert(fixture.forall(s => rel.contains(s._2.replace("'", "''"))))
     assert(rel.contains("CAST(doc_id AS BIGINT)"))
   }
+
+  test("more than 32 profiles throw instead of wrapping the language mask") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graft.LangIdPick
+    val profiles = (0 until 33).map { i =>
+      s"l$i" -> Set(s"${('a' + i % 26).toChar}${('a' + i / 26).toChar}x")
+    }
+    intercept[IllegalArgumentException](LangIdPick(Literal("abc"), profiles))
+    // the boundary itself is legal
+    LangIdPick(Literal("abc"), profiles.take(32))
+  }
 }

@@ -23,20 +23,18 @@ class ServingPlannerSpec extends SparkSpec {
       "bq" -> tmp("bq"), "mrl" -> tmp("mrl"))
   }
 
-  private lazy val tiers: ServingPlanner.Tiers = {
+  private val fits: Seq[(String, IvfIndex.Fit)] = Seq(
+    "flat" -> ((_, _) => IvfIndex.Flat), "sq" -> IvfIndex.Sq8.fit,
+    "pq" -> IvfIndex.Pq.fit(m = 8, ksub = 16, iters = 3),
+    "bq" -> IvfIndex.Bq.fit, "mrl" -> IvfIndex.Mrl.fit(prefixDim = 16))
+
+  // the flat index first: specs grade against `tiers.head`
+  private lazy val tiers: Seq[IvfIndex.Index] = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
-    ServingPlanner.Tiers(
-      flat = IvfIndex.write(emb, "embedding", "vec_id", tierPaths("flat"),
-        nCentroids = nCents, iters = 3),
-      sq = Some(IvfIndex.writeSq(emb, "embedding", "vec_id", tierPaths("sq"),
-        nCentroids = nCents, iters = 3, dim = dim)),
-      pq = Some(IvfIndex.writePq(emb, "embedding", "vec_id", tierPaths("pq"),
-        nCentroids = nCents, iters = 3, dim = dim, m = 8, ksub = 16,
-        pqIters = 3)),
-      bq = Some(IvfIndex.writeBq(emb, "embedding", "vec_id", tierPaths("bq"),
-        nCentroids = nCents, iters = 3, dim = dim)),
-      mrl = Some(IvfIndex.writeMrl(emb, "embedding", "vec_id", tierPaths("mrl"),
-        nCentroids = nCents, iters = 3, prefixDim = 16)))
+    fits.map { case (tag, fit) =>
+      IvfIndex.write(emb, "embedding", "vec_id", tierPaths(tag),
+        nCentroids = nCents, iters = 3, tier = fit)
+    }
   }
 
   private lazy val sample: Seq[Array[Double]] = {
@@ -48,29 +46,18 @@ class ServingPlannerSpec extends SparkSpec {
   }
 
   test("choose meets the target, verified by an independent re-measurement") {
-    val plan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val plan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 0.6, scanBudgetBytesPerRow = dim * 8, maxShortlist = 64)
-    info(s"plan: ${plan.tier} nProbe=${plan.nProbe} shortlist=${plan.shortlist} " +
+    info(s"plan: ${plan.index.tier.name} nProbe=${plan.nProbe} shortlist=${plan.shortlist} " +
       f"bytes=${plan.bytesPerRow} recall=${plan.measuredRecall}%.3f")
     assert(plan.measuredRecall >= 0.6)
     assert(plan.bytesPerRow <= dim * 8)
     // re-measure the chosen config OURSELVES against the exact index —
     // the plan's recall claim must reproduce, not just be self-reported
-    val truth = IvfIndex.probedTopKBatch(spark, tiers.flat, sample, nCents, k)
+    val truth = IvfIndex.probedTopKBatch(spark, tiers.head, sample, nCents, k)
       .map(_.map(_._1).toSet)
-    val got: IndexedSeq[Seq[(Long, Double)]] = plan.tier match {
-      case "binary" => IvfIndex.probedTopKBqBatch(spark, tiers.bq.get, sample,
-        plan.nProbe, k, plan.shortlist.get)
-      case "pq" => IvfIndex.probedTopKBatchAdc(spark, tiers.pq.get, sample,
-        plan.nProbe, k)
-      case "mrl" => IvfIndex.probedTopKMrlBatch(spark, tiers.mrl.get, sample,
-        plan.nProbe, k, plan.shortlist.get)
-      case "sq8" => IvfIndex.probedTopKBatchSq(spark, tiers.sq.get, sample,
-        plan.nProbe, k)
-      case "flat" => IvfIndex.probedTopKBatch(spark, tiers.flat, sample,
-        plan.nProbe, k)
-      case t => fail(s"unknown tier $t")
-    }
+    val got: IndexedSeq[Seq[(Long, Double)]] = IvfIndex.probedTopKBatch(spark,
+      plan.index, sample, plan.nProbe, k, plan.shortlist.getOrElse(0))
     val re = (got, truth).zipped.map { (g, e) =>
       g.count(t => e(t._1)).toDouble / e.size
     }.sum / sample.size
@@ -81,23 +68,24 @@ class ServingPlannerSpec extends SparkSpec {
   test("the planner prefers the most compressed passing tier") {
     // a lax target everything passes at full knobs: the winner must be the
     // CHEAPEST tier by bytes/row that measured over the bar
-    val plan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val plan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 0.2, scanBudgetBytesPerRow = dim * 8, maxShortlist = 64)
     // binary is 8 bytes at dim=64 and its shortlist=64 ceiling clears 0.2
     // on this corpus (BqServeSpec's floor is 0.2 at shortlist 40)
     assert(plan.bytesPerRow <= 16,
-      s"lax target should pick a compressed tier, got ${plan.tier} at ${plan.bytesPerRow} B/row")
+      s"lax target should pick a compressed tier, got ${plan.index.tier.name} at ${plan.bytesPerRow} B/row")
   }
 
   test("a tight memory budget excludes heavy tiers from the plan") {
-    val plan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val plan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 0.2, scanBudgetBytesPerRow = 16, maxShortlist = 64)
     assert(plan.bytesPerRow <= 16, s"budget violated: ${plan.bytesPerRow}")
-    assert(Set("binary", "pq").contains(plan.tier), s"tier ${plan.tier} over budget")
+    assert(Set("binary", "pq").contains(plan.index.tier.name),
+      s"tier ${plan.index.tier.name} over budget")
   }
 
   test("perfect recall within a full budget resolves to the exact flat tier") {
-    val plan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val plan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 1.0, scanBudgetBytesPerRow = dim * 8, maxShortlist = 8)
     // flat at nProbe=nCentroids IS the truth ranking — always feasible
     assert(plan.measuredRecall == 1.0)
@@ -108,25 +96,25 @@ class ServingPlannerSpec extends SparkSpec {
     // shortlisted tier (binary/mrl) must report the flat full-precision
     // column it still needs on storage for the refine gather, and
     // non-shortlisted tiers must report zero
-    val plan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val plan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 0.2, scanBudgetBytesPerRow = 16, maxShortlist = 64)
     if (plan.shortlist.isDefined)
       assert(plan.refineBytesPerRow == dim * 8,
-        s"shortlisted tier ${plan.tier} must carry the flat refine column: " +
+        s"shortlisted tier ${plan.index.tier.name} must carry the flat refine column: " +
           s"${plan.refineBytesPerRow}")
     else
       assert(plan.refineBytesPerRow == 0,
-        s"non-shortlisted tier ${plan.tier} gathers nothing: ${plan.refineBytesPerRow}")
-    val exact = ServingPlanner.choose(spark, tiers, dim, sample, k,
+        s"non-shortlisted tier ${plan.index.tier.name} gathers nothing: ${plan.refineBytesPerRow}")
+    val exact = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 1.0, scanBudgetBytesPerRow = dim * 8, maxShortlist = 8)
     assert(exact.shortlist.isDefined == (exact.refineBytesPerRow == dim * 8),
-      s"refine obligation must track shortlisting: ${exact.tier} " +
+      s"refine obligation must track shortlisting: ${exact.index.tier.name} " +
         s"shortlist=${exact.shortlist} refine=${exact.refineBytesPerRow}")
   }
 
   test("infeasibility throws with the best measured alternative, never under-delivers") {
     val e = intercept[IllegalStateException] {
-      ServingPlanner.choose(spark, tiers, dim, sample, k,
+      ServingPlanner.choose(spark, tiers, sample, k,
         recallTarget = 0.6, scanBudgetBytesPerRow = 4, maxShortlist = 64)
     }
     assert(e.getMessage.contains("bytes/row"))
@@ -141,48 +129,32 @@ class ServingPlannerSpec extends SparkSpec {
     // write handles — the reference's cache-first index lifecycle
     // (src/eval/experiment.py:60-76 loads the persisted index before
     // re-encoding anything).
-    val warmPlan = ServingPlanner.choose(spark, tiers, dim, sample, k,
+    val warmPlan = ServingPlanner.choose(spark, tiers, sample, k,
       recallTarget = 0.6, scanBudgetBytesPerRow = dim * 8, maxShortlist = 64)
     tierPaths.values.foreach { p =>
       assert(IvfIndex.recover(spark, p).isEmpty,
         s"clean index dir $p claimed recovery work")
     }
-    val cold = ServingPlanner.Tiers(
-      flat = IvfIndex.open(spark, tierPaths("flat")),
-      sq = Some(IvfIndex.openSq(spark, tierPaths("sq"))),
-      pq = Some(IvfIndex.openPq(spark, tierPaths("pq"))),
-      bq = Some(IvfIndex.openBq(spark, tierPaths("bq"))),
-      mrl = Some(IvfIndex.openMrl(spark, tierPaths("mrl"))))
+    val cold = fits.map { case (tag, _) => IvfIndex.open(spark, tierPaths(tag)) }
     // the sidecar round-trip must preserve centroid geometry bit-for-bit
     // (any drift would silently re-route probes)
-    assert(cold.flat.centroids.map(_.toSeq).toSeq ==
-      tiers.flat.centroids.map(_.toSeq).toSeq,
+    assert(cold.head.centroids.map(_.toSeq).toSeq ==
+      tiers.head.centroids.map(_.toSeq).toSeq,
       "flat centroids changed across the write/read boundary")
-    val coldPlan = ServingPlanner.choose(spark, cold, dim, sample, k,
+    val coldPlan = ServingPlanner.choose(spark, cold, sample, k,
       recallTarget = 0.6, scanBudgetBytesPerRow = dim * 8, maxShortlist = 64)
-    assert((coldPlan.tier, coldPlan.nProbe, coldPlan.shortlist) ==
-      (warmPlan.tier, warmPlan.nProbe, warmPlan.shortlist),
+    assert((coldPlan.index.tier.name, coldPlan.nProbe, coldPlan.shortlist) ==
+      (warmPlan.index.tier.name, warmPlan.nProbe, warmPlan.shortlist),
       s"cold plan $coldPlan != warm plan $warmPlan")
     assert(coldPlan.measuredRecall == warmPlan.measuredRecall,
       "measured recall drifted across the write/read boundary")
     // and the chosen configuration actually SERVES from the cold handles:
     // run the plan's batched path and re-grade it against the cold exact
     // index — the planner's number must reproduce on the reopened index
-    val truth = IvfIndex.probedTopKBatch(spark, cold.flat, sample, nCents, k)
+    val truth = IvfIndex.probedTopKBatch(spark, cold.head, sample, nCents, k)
       .map(_.map(_._1).toSet)
-    val served: IndexedSeq[Seq[(Long, Double)]] = coldPlan.tier match {
-      case "binary" => IvfIndex.probedTopKBqBatch(spark, cold.bq.get, sample,
-        coldPlan.nProbe, k, coldPlan.shortlist.get)
-      case "pq" => IvfIndex.probedTopKBatchAdc(spark, cold.pq.get, sample,
-        coldPlan.nProbe, k)
-      case "mrl" => IvfIndex.probedTopKMrlBatch(spark, cold.mrl.get, sample,
-        coldPlan.nProbe, k, coldPlan.shortlist.get)
-      case "sq8" => IvfIndex.probedTopKBatchSq(spark, cold.sq.get, sample,
-        coldPlan.nProbe, k)
-      case "flat" => IvfIndex.probedTopKBatch(spark, cold.flat, sample,
-        coldPlan.nProbe, k)
-      case t => fail(s"unknown tier $t")
-    }
+    val served: IndexedSeq[Seq[(Long, Double)]] = IvfIndex.probedTopKBatch(spark,
+      coldPlan.index, sample, coldPlan.nProbe, k, coldPlan.shortlist.getOrElse(0))
     val re = (served, truth).zipped.map { (g, e) =>
       g.count(t => e(t._1)).toDouble / e.size
     }.sum / sample.size
